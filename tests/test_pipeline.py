@@ -18,6 +18,7 @@ def _embs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+@pytest.mark.slow
 def test_bucketed_neardup_subset_of_exact(spark, sf_dir):
     embs = _embs(spark, sf_dir)
     exact = {

@@ -3,38 +3,9 @@ stay bit-identical to their previous formulations."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-
-
-def test_bpe_local_and_distributed_training_agree(spark, monkeypatch):
-    """bpe_train's probe-bounded coordinator path must produce the
-    EXACT merge list and word table the distributed per-round loop
-    produces (same replace semantics, same tie-breaks) — forced onto
-    each path via the word-type bound."""
-    from time_series_db_spark.pipeline import bpe
-    from time_series_db_spark.sources import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-
-    monkeypatch.setattr(bpe, "_DRIVER_TRAIN_MAX_WORDS", 0)
-    dist_merges, dist_wf = bpe.bpe_train(docs, n_merges=8)
-    dist_rows = sorted(
-        (r["__w"], r["__f"], r["__seq"])
-        for r in dist_wf.select("__w", "__f", "__seq").collect()
-    )
-
-    monkeypatch.setattr(bpe, "_DRIVER_TRAIN_MAX_WORDS", 262_144)
-    loc_merges, loc_wf = bpe.bpe_train(docs, n_merges=8)
-    loc_rows = sorted(
-        (r["__w"], r["__f"], r["__seq"])
-        for r in loc_wf.select("__w", "__f", "__seq").collect()
-    )
-
-    assert loc_merges == dist_merges
-    assert loc_rows == dist_rows
 
 
 def test_bpe_local_training_tie_breaks_like_orderby():
@@ -65,28 +36,3 @@ def test_bucket_pairs_barrier_output_unchanged(spark):
     df = QUERIES["m3ql_histogram_percentile"](spark, SF_DIR)
     bad = df.filter(F.col("value").isNull() | F.isnan("value")).count()
     assert bad == 0
-
-
-def test_connected_components_paths_agree(spark, monkeypatch):
-    """The probe-bounded union-find path must produce exactly the
-    min-label components the distributed propagation loop produces."""
-    from time_series_db_spark.pipeline import dedup
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (7, 7), (5, 3)],
-        "id_a long, id_b long",
-    )
-    monkeypatch.setattr(dedup, "_CC_COORD_MAX_EDGES", 0)
-    dist = sorted(
-        (r["id"], r["comp"])
-        for r in dedup.connected_components(edges).collect()
-    )
-    monkeypatch.setattr(dedup, "_CC_COORD_MAX_EDGES", 500_000)
-    loc = sorted(
-        (r["id"], r["comp"])
-        for r in dedup.connected_components(edges).collect()
-    )
-    assert dist == loc
-    assert loc == [
-        (1, 1), (2, 1), (3, 1), (5, 1), (7, 7), (10, 10), (11, 10),
-    ]

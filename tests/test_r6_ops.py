@@ -99,7 +99,7 @@ def test_dsir_weights_separate_target_from_raw(spark):
 
 def test_dsir_weight_replay_exact(spark):
     from time_series_db_spark.pipeline.retrieval import dsir_log_weights
-    from time_series_db_spark.pipeline.textprep import hash64
+    from time_series_db_spark.hashing import hash64
 
     rows = [(1, "x y", "en"), (2, "x x", "fr"), (3, "y z z", "en")]
     B = 16
@@ -275,6 +275,7 @@ def test_exposition_roundtrip_adversarial_labels(spark):
     assert a == b
 
 
+@pytest.mark.slow
 @settings(
     max_examples=30,
     deadline=None,
@@ -362,6 +363,7 @@ def test_line_protocol_roundtrip_adversarial_tags(spark):
     assert a == b
 
 
+@pytest.mark.slow
 @settings(
     max_examples=30,
     deadline=None,

@@ -191,6 +191,7 @@ _wire_lines = _st.lists(
 )
 
 
+@pytest.mark.slow
 @_settings(
     max_examples=25,
     deadline=None,
@@ -463,6 +464,7 @@ def _bfd_replay(items, budget):
     return assign
 
 
+@pytest.mark.slow
 @settings(
     max_examples=10,
     deadline=None,

@@ -88,6 +88,66 @@ def probe_memo(dfs, kind: str, compute):
     return memo[key]
 
 
+def within_bound(df: DataFrame, bound: int | None, kind: str) -> bool:
+    """True iff ``df`` has at most ``bound`` rows (``None``: no bound,
+    no probe).  With :func:`bounded_rows`, which makes the same test
+    while fetching the rows, this is every "coordinator if small"
+    decision in the package.  The probe,
+    ``limit(bound + 1).count() <= bound``, never counts past bound + 1
+    rows and is memoized like every :func:`probe_memo` result (the
+    bound is part of the key).
+
+    Each bound keeps what crosses to the driver, or to every executor,
+    small whatever the input (the reference keeps such intermediates on
+    its coordinator heap):
+
+    * ``bpe._DRIVER_TRAIN_MAX_WORDS`` word types (≤ ~50 MB of symbol
+      strings) and ``dedup._CC_COORD_MAX_EDGES`` id pairs: below it the
+      merge loop / union-find runs on the driver over one collect
+      instead of one to three Spark jobs per round;
+    * ``retrieval.MAX_MMR_SHORTLIST`` rows of ``(id, rel, vector)``
+      (~1 MB): the greedy selection is coordinator work, so above it
+      the call refuses;
+    * ``text.MAX_BROADCAST_TOKEN_ROWS`` token rows (tens of MB): above
+      it the join is left unhinted and AQE decides at runtime;
+    * ``ann.MAX_ADC_QUERIES`` / ``ann.MAX_HN_ANCHORS`` query rows: the
+      flat scans broadcast every query, so above it they refuse.
+
+    Where both sides compute a result, the driver side is the same
+    algorithm with SQL semantics (NULLs, NaN ordering, tie-breaks), so
+    the side never shows in the output — ``tests/test_dual_path.py``
+    checks that on dirty input at sizes bound−1, bound and bound+1."""
+    if bound is None:
+        return True
+    return probe_memo(
+        df, (kind, bound), lambda: df.limit(bound + 1).count() <= bound
+    )
+
+
+def bounded_rows(df: DataFrame, bound: int | None, kind: str):
+    """``(pinned, rows)``: ``df`` pinned with :func:`persist_tracked`,
+    and its collected rows when it has at most ``bound`` rows (``None``
+    otherwise; a ``None`` bound always collects).  One action both
+    decides and fetches — at most ``bound + 1`` rows of the pinned
+    frame, since a separate count would add Spark jobs to every call —
+    and the verdict is memoized like :func:`within_bound`'s, so a warm
+    re-run above the bound runs no action.  The pinned frame is what the
+    caller's distributed side should read."""
+    pinned = persist_tracked(df)
+    if bound is None:
+        return pinned, pinned.collect()
+    rows = None
+
+    def probe():
+        nonlocal rows
+        rows = pinned.limit(bound + 1).collect()
+        return len(rows) <= bound
+
+    if not probe_memo(pinned, (kind, bound), probe):
+        return pinned, None
+    return pinned, pinned.collect() if rows is None else rows
+
+
 def _release_scope(scope: str, blocking: bool) -> int:
     n = 0
     _PROBES.pop(scope, None)

@@ -12,13 +12,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from time_series_db_spark.catalog import ORACLES, quant, register, sql_quant
+from time_series_db_spark.hashing import sql_hash64
 from time_series_db_spark.pipeline import ann, dedup, multimodal, text, textprep
 from time_series_db_spark.pipeline.textprep import (
     FP_BASE,
     FP_MOD,
     SQL_NORMALIZE,
     SQL_TOKENS,
-    sql_hash64,
     sql_word_shingles,
 )
 from time_series_db_spark.sources import load_table
@@ -4059,10 +4059,10 @@ def search_mmr(spark, sf_dir):
     top-10 (relevance max-normalized): greedy
     argmax λ·rel − (1−λ)·max-sim-to-selected, λ=0.5 — near-duplicate
     hits stop crowding the RAG context window.  The shortlist is
-    metadata-sized by construction; pairwise sims persist once; each
-    round is one distributed argmax + 1-row collect (the BPE
-    coordinator shape).  Oracle unrolls the greedy as scalar CTE
-    steps."""
+    metadata-sized by construction, so a bounded probe admits it and
+    the greedy selection runs on the driver over one collect of
+    ``(id, rel, vec)`` (``cache.bounded_rows``).  Oracle unrolls the
+    greedy as scalar CTE steps."""
     from time_series_db_spark.pipeline import retrieval
 
     lex = retrieval.bm25_topk(

@@ -1135,7 +1135,7 @@ def limit_ratio(
     group-independent, as upstream)."""
     if not -1.0 <= r <= 1.0:
         raise ValueError("limit_ratio r must be in [-1, 1]")
-    from time_series_db_spark.pipeline.textprep import hash64
+    from time_series_db_spark.hashing import hash64
 
     df = _with_group_key(sf.df, list(keys), without)
     u = (hash64(F.col("series_key"), "lr") % 1_000_000) / 1_000_000.0

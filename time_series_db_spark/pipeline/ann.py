@@ -1358,10 +1358,7 @@ def _check_dense_codebooks(books: DataFrame, m: int, k: int) -> None:
         )
 
 
-#: flat ADC is O(corpus × queries) with a broadcast per-query LUT —
-#: beyond this many queries the broadcast (m·k doubles per query) and
-#: the scored row count stop being "small side" and the celled
-#: :func:`ivfpq_topk` is the right shape
+#: query rows the flat ADC scan broadcasts (``cache.within_bound``)
 MAX_ADC_QUERIES = 10_000
 
 
@@ -1391,17 +1388,16 @@ def pq_adc_topk(
     WindowGroupLimit cut as the exact path.  Recall vs exact L2 is
     pinned by a unit-test gate.
     """
-    if max_queries is not None:
-        # bounded probe: LIMIT max+1 caps the work regardless of size
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"pq_adc_topk is a flat O(corpus × queries) ADC scan "
-                f"with a broadcast per-query LUT; the query set exceeds "
-                f"max_queries={max_queries}. Use ivfpq_topk (celled "
-                f"scan) for large query sets, or pass max_queries "
-                f"explicitly to override."
-            )
+    from time_series_db_spark.cache import within_bound
+
+    if not within_bound(queries, max_queries, "adc_queries"):
+        raise ValueError(
+            f"pq_adc_topk is a flat O(corpus × queries) ADC scan with a "
+            f"broadcast per-query LUT; the query set exceeds "
+            f"max_queries={max_queries}. Use ivfpq_topk (celled scan) "
+            f"for large query sets, or pass max_queries explicitly to "
+            f"override."
+        )
     vecs = corpus.select(id_col, _as_double(F.col(vec_col)).alias("__v"))
     books = pq_codebooks(
         vecs, m=m, k=k, iters=train_iters, id_col=id_col, dims=dims
@@ -1645,12 +1641,7 @@ def ivfpq_topk(
     )
 
 
-#: the flat hard-negative miner broadcasts the FULL anchor set into an
-#: inequality-condition BroadcastNestedLoopJoin — O(corpus × anchors)
-#: scored rows plus a per-anchor broadcast cost, the same flat-exact
-#: shape as :data:`MAX_ADC_QUERIES` gates for ADC.  Beyond this many
-#: anchors, :func:`hard_negatives_ivf` (celled candidate scan) is the
-#: right shape.
+#: anchor rows the flat hard-negative miner broadcasts (``cache.within_bound``)
 MAX_HN_ANCHORS = 10_000
 
 
@@ -1678,17 +1669,16 @@ def hard_negatives(
     (default :data:`MAX_HN_ANCHORS`) — a large anchor set silently
     turns the broadcast into gigabytes; use :func:`hard_negatives_ivf`
     there instead."""
-    if max_queries is not None:
-        # bounded probe: LIMIT max+1 caps the work regardless of size
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"hard_negatives is a flat O(corpus × anchors) scan "
-                f"with the full anchor set broadcast; the anchor set "
-                f"exceeds max_queries={max_queries}. Use "
-                f"hard_negatives_ivf (celled scan) for large anchor "
-                f"sets, or pass max_queries explicitly to override."
-            )
+    from time_series_db_spark.cache import within_bound
+
+    if not within_bound(queries, max_queries, "hn_anchors"):
+        raise ValueError(
+            f"hard_negatives is a flat O(corpus × anchors) scan with the "
+            f"full anchor set broadcast; the anchor set exceeds "
+            f"max_queries={max_queries}. Use hard_negatives_ivf (celled "
+            f"scan) for large anchor sets, or pass max_queries "
+            f"explicitly to override."
+        )
     spark = corpus.sparkSession
     n_parts = spark.sparkContext.defaultParallelism
     c = corpus.select(

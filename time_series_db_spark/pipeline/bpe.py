@@ -88,6 +88,23 @@ def _pair_counts(wf: DataFrame) -> DataFrame:
 _CHECKPOINT_EVERY = 16
 
 
+def _merge_step(wf: DataFrame, i: int, left: str, right: str) -> DataFrame:
+    """Apply merge number ``i`` to ``__seq`` as the literal
+    space-bounded replace, truncating lineage every
+    ``_CHECKPOINT_EVERY`` merges."""
+    wf = wf.withColumn(
+        "__seq",
+        F.replace(
+            F.col("__seq"),
+            F.lit(f" {left} {right} "),
+            F.lit(f" {left}{right} "),
+        ),
+    )
+    if (i + 1) % _CHECKPOINT_EVERY == 0:
+        wf = wf.localCheckpoint(eager=True)
+    return wf
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
@@ -104,38 +121,22 @@ def bpe_train(
     """
     if n_merges <= 0:
         raise ValueError("n_merges must be positive")
-    from time_series_db_spark.cache import persist_tracked
+    from time_series_db_spark.cache import bounded_rows
 
-    wf = persist_tracked(
-        _word_freq(docs, text_col).withColumn("__seq", _initial_seq())
-    )
-    from time_series_db_spark.cache import probe_memo
-
-    n_words = probe_memo(
-        wf,
+    wf, rows = bounded_rows(
+        _word_freq(docs, text_col).withColumn("__seq", _initial_seq()),
+        _DRIVER_TRAIN_MAX_WORDS,
         "bpe_train_bound",
-        lambda: wf.limit(_DRIVER_TRAIN_MAX_WORDS + 1).count(),
     )
-    if n_words <= _DRIVER_TRAIN_MAX_WORDS:
-        # coordinator path: ONE bounded collect of the cached word
-        # table replaces 2 Spark jobs per merge round; the returned
-        # word table is the same stacked-replace plan over the same
-        # cache the distributed loop would have built
-        rows = wf.select("__f", "__seq").collect()
+    if rows is not None:
+        # coordinator path: the returned word table is the same
+        # stacked-replace plan over the same cache the distributed
+        # loop would have built
         merges = _train_rounds_local(
             [(int(r["__f"]), r["__seq"]) for r in rows], n_merges
         )
         for i, (_rank, left, right, _freq) in enumerate(merges):
-            wf = wf.withColumn(
-                "__seq",
-                F.replace(
-                    F.col("__seq"),
-                    F.lit(f" {left} {right} "),
-                    F.lit(f" {left}{right} "),
-                ),
-            )
-            if (i + 1) % _CHECKPOINT_EVERY == 0:
-                wf = wf.localCheckpoint(eager=True)
+            wf = _merge_step(wf, i, left, right)
         return merges, wf
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(n_merges):
@@ -149,29 +150,11 @@ def bpe_train(
             break
         left, right = top[0]["__pair"].split(" ")
         merges.append((rank, left, right, int(top[0]["__cnt"])))
-        wf = wf.withColumn(
-            "__seq",
-            F.replace(
-                F.col("__seq"),
-                F.lit(f" {left} {right} "),
-                F.lit(f" {left}{right} "),
-            ),
-        )
-        if (rank + 1) % _CHECKPOINT_EVERY == 0:
-            wf = wf.localCheckpoint(eager=True)
+        wf = _merge_step(wf, rank, left, right)
     return merges, wf
 
 
-#: word-type bound for COORDINATOR-side training: when a bounded probe
-#: proves the word-frequency table has at most this many rows, the
-#: merge loop runs on the driver over the collected ``(freq, seq)``
-#: pairs — the reference-class trainer shape (word counts in coordinator
-#: memory) — instead of paying 2 Spark jobs per merge round for a table
-#: that is often a few thousand rows.  ≤ ~50 MB of driver strings at
-#: the bound.  Larger vocabularies keep the distributed loop unchanged;
-#: both paths run the IDENTICAL algorithm (same replace semantics, same
-#: (count DESC, pair ASC) tie-break), so the choice is invisible in the
-#: result — the DuckDB oracle replays training either way.
+#: word types the driver-side merge loop takes (``cache.bounded_rows``)
 _DRIVER_TRAIN_MAX_WORDS = 262_144
 
 
@@ -218,16 +201,7 @@ def bpe_segment_words(words: DataFrame, merges) -> DataFrame:
     depth stays bounded via the trainer's checkpoint cadence."""
     seq = words.withColumn("__seq", _initial_seq())
     for i, (_rank, left, right, _freq) in enumerate(merges):
-        seq = seq.withColumn(
-            "__seq",
-            F.replace(
-                F.col("__seq"),
-                F.lit(f" {left} {right} "),
-                F.lit(f" {left}{right} "),
-            ),
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0:
-            seq = seq.localCheckpoint(eager=True)
+        seq = _merge_step(seq, i, left, right)
     return seq
 
 

@@ -39,7 +39,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_db_spark.pipeline.textprep import hash64, tokens
+from time_series_db_spark.hashing import hash64
+from time_series_db_spark.pipeline.textprep import tokens
 
 #: hash seed namespacing classifier buckets away from dedup/simhash
 _SEED = "qcls"

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import dedup, pack, text, textprep
 
 #: the pipeline_curate defaults — one source of truth for the funnel
@@ -60,7 +61,7 @@ def curate_features(
     return feats.select(
         F.col(id_col),
         F.col("quality"),
-        textprep.hash64(
+        hash64(
             textprep.normalize(F.col(text_col)), "curate"
         ).alias("norm_hash"),
         F.size(textprep.tokens(F.col(text_col))).cast("long")

@@ -19,7 +19,7 @@ default is the JVM-native ``xxhash64`` — identical results to the
 md5-based portable hash for any collision-free hash, ~10× cheaper per
 gram, no hex→int round-trip (r13 optimization, guide §4.1: cheaper
 expression choice inside codegen).  The DuckDB oracles keep the
-md5-based :func:`~time_series_db_spark.pipeline.textprep.hash64`
+md5-based :func:`~time_series_db_spark.hashing.hash64`
 rendering: both sides count distinct-gram collisions between the same
 two string sets, so the differential still pins exactness — and would
 surface an xxhash64 collision as a mismatch instead of hiding it.
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import textprep
 
 
@@ -40,7 +41,7 @@ def ngram_hash_set(text_col: Column, n: int, hash_fn: str = "xxhash64") -> Colum
     shingle set)."""
     grams = textprep.word_shingles(textprep.tokens(text_col), n)
     return F.transform(
-        grams, lambda g: textprep.hash64(g, "decontam", fn=hash_fn)
+        grams, lambda g: hash64(g, "decontam", fn=hash_fn)
     )
 
 

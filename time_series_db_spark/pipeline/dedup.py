@@ -21,7 +21,7 @@ Scale design (the point of each algorithm):
 
 All expressions are Catalyst built-ins (md5/conv/array ops) — no Python
 in the hot path. Hash choice: md5-60bit (portable to the DuckDB oracle);
-swap ``textprep.hash64(fn="xxhash64")`` for production throughput
+swap ``hash64(fn="xxhash64")`` for production throughput
 (DuckDB has no xxhash64, so the differential entries stay on md5 — the
 cold-cost cut is hashing per TOKEN instead of per shingle string, which
 shrinks md5 input bytes ~3× and drops shingle-string building entirely;
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import textprep
 
 #: MinHash defaults: 16 permutations, 4 bands × 4 rows → catches
@@ -124,7 +125,7 @@ def minhash_signatures(
     """
     th = F.transform(
         textprep.tokens(F.col(text_col)),
-        lambda t: F.pmod(textprep.hash64(t, "mh", hash_fn), F.lit(BASE_MOD)),
+        lambda t: F.pmod(hash64(t, "mh", hash_fn), F.lit(BASE_MOD)),
     )
     base = df.select(F.col(id_col), shingle_hashes(th, shingle_k).alias("shingles"))
 
@@ -477,7 +478,7 @@ def simhash(
     toks = (
         df.select(F.col(id_col), textprep.tokens(F.col(text_col)).alias("__t"))
         .select(F.col(id_col), F.explode("__t").alias("__tok"))
-        .withColumn("__h", textprep.hash64(F.col("__tok"), "sim", hash_fn))
+        .withColumn("__h", hash64(F.col("__tok"), "sim", hash_fn))
     )
     votes = [
         F.sum(
@@ -923,17 +924,7 @@ def embedding_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-#: edge bound for COORDINATOR-side component resolution: verified
-#: near-dup pair sets are banding-budget-bounded (the bench asserts the
-#: celled operators' candidate counts), so the usual case is thousands
-#: of edges — a probe-bounded union-find on the driver replaces
-#: O(diameter) shuffle rounds × (checkpoint job + convergence probe)
-#: with ONE bounded collect.  Above the bound the distributed
-#: min-label-propagation loop runs unchanged (with the edge table
-#: pinned so rounds re-read one materialization).  Identical output by
-#: construction: component id = minimum reachable node id, and Python
-#: `<` on longs/strings matches Spark's least/min ordering (UTF8 binary
-#: == code-point order).
+#: edges the driver-side union-find takes (``cache.bounded_rows``)
 _CC_COORD_MAX_EDGES = 500_000
 
 
@@ -962,17 +953,17 @@ def connected_components(
     none of the per-round jobs (the reference-coordinator shape, like
     the BPE trainer and the MMR selection).
     """
-    from time_series_db_spark.cache import persist_tracked, probe_memo
+    from time_series_db_spark.cache import bounded_rows, persist_tracked
 
-    e2 = persist_tracked(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    )
-    n_edges = probe_memo(
-        e2,
+    e2, rows = bounded_rows(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        _CC_COORD_MAX_EDGES,
         "cc_edge_bound",
-        lambda: e2.limit(_CC_COORD_MAX_EDGES + 1).count(),
     )
-    if n_edges <= _CC_COORD_MAX_EDGES:
+    if rows is not None:
+        # union-find whose roots are component minima; a NULL endpoint
+        # joins nothing (the loop's equi-joins never match NULL) but is
+        # itself one (NULL, NULL) node row, as in the loop's output
         parent: dict = {}
 
         def find(x):
@@ -981,29 +972,16 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in e2.collect():
-            a, b = r["a"], r["b"]
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        comp_min: dict = {}
-        for v in parent:
-            rv = find(v)
-            m = comp_min.get(rv)
-            if m is None or v < m:
-                comp_min[rv] = v
-        out = [(v, comp_min[find(v)]) for v in parent]
-        from pyspark.sql.types import StructField, StructType
-
-        idt = e2.schema["a"].dataType
-        schema = StructType(
-            [StructField("id", idt), StructField("comp", idt)]
+        for a, b in rows:
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            if a is not None and b is not None:
+                ra, rb = find(a), find(b)
+                parent[max(ra, rb)] = min(ra, rb)
+        idt = e2.schema["a"].dataType.simpleString()
+        return edges.sparkSession.createDataFrame(
+            [(v, find(v)) for v in parent], f"id {idt}, comp {idt}"
         )
-        return edges.sparkSession.createDataFrame(out, schema)
 
     adj = persist_tracked(
         e2.unionByName(
@@ -1333,11 +1311,11 @@ def corpus_diff(
     """
     oh = old.select(
         F.col(id_col),
-        textprep.hash64(F.col(text_col), "snap").alias("__ho"),
+        hash64(F.col(text_col), "snap").alias("__ho"),
     )
     nh = new.select(
         F.col(id_col),
-        textprep.hash64(F.col(text_col), "snap").alias("__hn"),
+        hash64(F.col(text_col), "snap").alias("__hn"),
     )
     status = (
         F.when(F.col("__ho").isNull(), F.lit("added"))
@@ -1402,7 +1380,7 @@ def leakage_safe_split(
     )
     cluster = F.coalesce(F.col("comp"), F.col(id_col))
     bucket = F.pmod(
-        textprep.hash64(cluster.cast("string"), seed), F.lit(10000)
+        hash64(cluster.cast("string"), seed), F.lit(10000)
     )
     expr = None
     for name, cut in cuts[:-1]:
@@ -1491,7 +1469,7 @@ def boilerplate_span_removal(
                 )
             ).alias("span_idx", "span"),
         )
-        .withColumn("__h", textprep.hash64(F.col("span"), "span", fn=hash_fn))
+        .withColumn("__h", hash64(F.col("span"), "span", fn=hash_fn))
     )
     prevalence = (
         spans.select("__h", id_col)

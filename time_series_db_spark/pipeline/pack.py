@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import textprep
 
 #: shards for packing — the unit of window parallelism. At 100 TB this is
@@ -73,9 +74,9 @@ def pack_from_counts(
         raise ValueError("n_shards must be positive")
     # md5-based hash64: engine-portable (the DuckDB oracle computes the
     # identical shard), non-negative, uniform; production runs off the
-    # differential gate can swap fn="xxhash64" (textprep.hash64 contract)
+    # differential gate can swap fn="xxhash64" (hashing.hash64 contract)
     shard = (
-        textprep.hash64(F.col(id_col).cast("string"), "shard")
+        hash64(F.col(id_col).cast("string"), "shard")
         % F.lit(int(n_shards))
     ).cast("int")
     base = df.select(
@@ -248,7 +249,7 @@ def sample_token_budget(
     ntok = F.size(
         F.filter(textprep.tokens(F.col(text_col)), lambda t: t != "")
     ).cast("long")
-    p = textprep.hash64(F.col(id_col).cast("string"), "budget")
+    p = hash64(F.col(id_col).cast("string"), "budget")
     base = (
         df.select(
             F.col(id_col),
@@ -376,8 +377,6 @@ def sample_weighted(
     per partition then a bounded merge, never a full sort of the
     corpus.  The final rank numbers only the n winners.
     """
-    from time_series_db_spark.pipeline.textprep import hash64
-
     if n <= 0:
         raise ValueError("sample size n must be positive")
     M = 1_000_000_007
@@ -441,7 +440,7 @@ def pack_bins_bfd(
     toks = F.size(F.split(norm, " ")).cast("long")
     base = df.select(
         F.col(id_col),
-        (textprep.hash64(F.col(id_col).cast("string"), "packshard")
+        (hash64(F.col(id_col).cast("string"), "packshard")
          % F.lit(n_shards)).cast("int").alias("shard"),
         toks.alias("n_tokens"),
     )

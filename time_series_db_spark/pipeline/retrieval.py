@@ -16,6 +16,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import textprep
 
 
@@ -133,7 +134,7 @@ def dsir_log_weights(
 
     Returns (id, n_tokens, weight) for every document with ≥1 token;
     positive weights mark target-like documents. The hash is the
-    portable md5-based :func:`textprep.hash64` so a SQL differential
+    portable md5-based :func:`hashing.hash64` so a SQL differential
     oracle computes bit-identical bucket ids.
 
     Scale shape — fit/score split, two corpus passes total: the FIT
@@ -153,7 +154,7 @@ def dsir_log_weights(
     if n_buckets <= 0:
         raise ValueError("n_buckets must be positive")
     nb = int(n_buckets)
-    bucket = textprep.hash64(F.col("token")) % F.lit(nb)
+    bucket = hash64(F.col("token")) % F.lit(nb)
     toks = (
         df.select(
             F.col(id_col),
@@ -383,13 +384,31 @@ def rrf_fuse(
     ).select(id_col, "rrf_score", "n_lists", "rank")
 
 
-#: max shortlist rows for :func:`mmr_rerank` — the pairwise sim table
-#: is n_short² rows and every greedy round is a sequential 1-row
-#: collect, so a 100k-row "shortlist" would be 10¹⁰ sim rows plus 100k
-#: coordinator rounds.  MMR is a POST-retrieval diversifier: cut a
-#: top-n first (bm25_topk / cosine_topk / rrf_fuse) and rerank THAT.
-#: Same bounded-probe discipline as ann.MAX_HN_ANCHORS.
+#: shortlist rows :func:`mmr_rerank` selects from (``cache.bounded_rows``)
 MAX_MMR_SHORTLIST = 2_000
+
+
+def _cosine(a: list | None, b: list | None) -> float | None:
+    """Driver-side ``dedup.cosine_expr``: the same sequential left-fold
+    dot products (Python ``+=`` is the identical IEEE-double fold), NULL
+    when either vector or any element is NULL or the lengths differ (as
+    ``zip_with`` pads with NULL), NULL on a zero norm (as
+    ``try_divide``)."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    if any(x is None for x in a) or any(y is None for y in b):
+        return None
+
+    def dot(u: list, v: list) -> float:
+        acc = 0.0
+        for x, y in zip(u, v):
+            acc += x * y
+        return acc
+
+    denom = math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))
+    if denom == 0.0:
+        return None
+    return dot(a, b) / denom
 
 
 def mmr_rerank(
@@ -418,72 +437,39 @@ def mmr_rerank(
     is coordinator work by construction (k·n cosines over ≤ 2000
     vectors), so it runs driver-side on ONE bounded collect of
     ``(id, rel, vec)`` — no n² pairwise table, no per-round jobs —
-    with the exact distributed semantics (sequential-left-fold cosine,
-    NULL on zero norms, F.max NULL/NaN ordering, score-desc/id-asc
-    tie-breaks).  Nothing here ever touches the corpus; the shortlist
-    ids broadcast into the embeddings scan exactly once.
+    with SQL semantics (``dedup.cosine_expr``'s left-fold cosine and
+    NULLs, F.max NULL/NaN ordering, score-desc/id-asc tie-breaks).  The
+    probe counts those collected rows: one per shortlist row when the
+    vector ids are unique.  Nothing here ever touches the corpus; the
+    shortlist ids broadcast into the embeddings scan exactly once.
     """
     if k <= 0 or not 0.0 <= lam <= 1.0:
         raise ValueError("mmr_rerank needs k > 0 and 0 <= lam <= 1")
-    from time_series_db_spark.cache import persist_tracked
+    from time_series_db_spark.cache import bounded_rows
 
-    # pinned: the bounded probe below and the selection collect read ONE
-    # materialization of the shortlist pipeline (a BM25/fused top-n is
-    # several stages — re-executing it for the probe doubled the cost)
-    cand = persist_tracked(
-        shortlist.select(
-            F.col(id_col).alias("__id"),
-            F.col(rel_col).cast("double").alias("__rel"),
-        )
+    cand = shortlist.select(
+        F.col(id_col).alias("__id"),
+        F.col(rel_col).cast("double").alias("__rel"),
     )
-    if max_shortlist is not None:
-        # bounded probe: LIMIT max+1 caps the probe's work regardless
-        # of the input's true size (1:1 projection of the shortlist, so
-        # the count is the shortlist's)
-        n_short = cand.limit(max_shortlist + 1).count()
-        if n_short > max_shortlist:
-            raise ValueError(
-                f"mmr_rerank builds an n_shortlist² pairwise-similarity "
-                f"table and runs one coordinator round per selection; "
-                f"the shortlist exceeds max_shortlist={max_shortlist}. "
-                f"Cut a top-n first (bm25_topk / ann.cosine_topk / "
-                f"rrf_fuse), or pass max_shortlist explicitly to "
-                f"override."
-            )
     vecs = embs.select(
         F.col(vec_id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     ).join(F.broadcast(cand.select("__id")), "__id")
-    # The shortlist is probe-ENFORCED coordinator-sized (≤ max_shortlist
-    # rows of (id, rel, d-dim vec) — ~1 MB at the 2000-row cap), so the
-    # greedy selection runs driver-side on ONE bounded collect instead
-    # of persisting an n_shortlist² pairwise-sim table and paying one
-    # distributed argmax job per selected item (r14: 18 jobs → 2 for
-    # k=5).  Bit-identical to the distributed formulation: the cosine
-    # is the same sequential left fold as dedup.cosine_expr/_dot_fold
-    # (Python `+=` is the identical IEEE-double left fold), NULL on a
-    # zero norm like try_divide, the per-candidate diversity penalty is
-    # a running max that skips NULLs like F.max, and the argmax orders
-    # (score DESC with NaN largest — Spark's double ordering — then id
-    # ASC).
-    base_rows = cand.join(vecs, "__id", "left").collect()
+    _, base_rows = bounded_rows(
+        cand.join(vecs, "__id", "left"), max_shortlist, "mmr_shortlist"
+    )
+    if base_rows is None:
+        raise ValueError(
+            f"mmr_rerank runs its greedy selection on the coordinator; "
+            f"the shortlist exceeds max_shortlist={max_shortlist}. "
+            f"Cut a top-n first (bm25_topk / ann.cosine_topk / "
+            f"rrf_fuse), or pass max_shortlist explicitly to override."
+        )
 
-    def _fold_dot(a: list, b: list) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    def _cos(a, b):
-        if a is None or b is None:
-            return None
-        import math as _m
-
-        denom = _m.sqrt(_fold_dot(a, a)) * _m.sqrt(_fold_dot(b, b))
-        if denom == 0.0:
-            return None  # try_divide semantics
-        return _fold_dot(a, b) / denom
-
+    # The greedy selection mirrors the SQL formulation: the cosine is
+    # _cosine, the per-candidate diversity penalty is a running max
+    # that skips NULLs like F.max, and the argmax orders score DESC
+    # (NaN largest, NULL last) then id ASC (NULL first).
     def _is_nan(x: float) -> bool:
         return x != x
 
@@ -500,7 +486,7 @@ def mmr_rerank(
         if sel_vecs:
             last = sel_vecs[-1]
             for c in pool:
-                s = _cos(c["v"], last)
+                s = _cosine(c["v"], last)
                 if s is None:
                     continue
                 m = c["ms"]
@@ -516,39 +502,27 @@ def mmr_rerank(
             ms = c["ms"] if c["ms"] is not None else 0.0
             return float(lam) * c["rel"] - inv * ms
 
-        # orderBy(desc(score), asc(id)): NaN sorts as the LARGEST
-        # double in Spark and NULL last under desc
         def _key(c):
             s = _score(c)
+            tie = (c["id"] is not None, c["id"])
             if s is None:
-                return (2, 0.0, c["id"])
+                return (2, 0.0, tie)
             if _is_nan(s):
-                return (0, 0.0, c["id"])
-            return (1, -s, c["id"])
+                return (0, 0.0, tie)
+            return (1, -s, tie)
 
         best = min(pool, key=_key)
         pool.remove(best)
         sel_vecs.append(best["v"])
         rows.append((best["id"], best["rel"], _score(best), rank))
-    spark = shortlist.sparkSession
-    # id field keeps the shortlist's own id type (string doc ids work);
-    # the rel column keeps the caller's rel_col name
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    # the id keeps the shortlist's own type (string doc ids work), the
+    # rel column the caller's rel_col name
+    id_type = shortlist.schema[id_col].dataType.simpleString()
+    return shortlist.sparkSession.createDataFrame(
+        rows,
+        f"`{id_col}` {id_type}, `{rel_col}` double, "
+        f"`mmr_score` double, `rank` bigint",
     )
-
-    schema = StructType(
-        [
-            StructField(id_col, shortlist.schema[id_col].dataType),
-            StructField(rel_col, DoubleType()),
-            StructField("mmr_score", DoubleType()),
-            StructField("rank", LongType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
 
 
 def _ndcg_discounts_nano(k: int) -> list[int]:

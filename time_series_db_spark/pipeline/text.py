@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from time_series_db_spark.hashing import hash64
 from time_series_db_spark.pipeline import textprep
 from time_series_db_spark.pipeline.textprep import FP_BASE, FP_MOD
 
@@ -136,7 +137,7 @@ def fingerprint(
     """
     tok = textprep.tokens(F.col(text_col))
     fp = F.aggregate(
-        F.transform(tok, lambda t: textprep.hash64(t, "fp") % 1_000_000),
+        F.transform(tok, lambda t: hash64(t, "fp") % 1_000_000),
         F.lit(0).cast("long"),
         lambda acc, h: (acc * FP_BASE + h) % FP_MOD,
     )
@@ -430,17 +431,7 @@ def vocab_count(
 #: The unigram/context tables stay broadcast at any V (O(V) rows).
 MAX_BROADCAST_VOCAB = 2048
 
-#: row bound above which a DATA-DEPENDENT token/word-type table stops
-#: being broadcast-hinted (kl_divergence's corpus unigram table,
-#: bpe_token_counts' word-type table).  Unlike ``MAX_BROADCAST_VOCAB``
-#: there is no knob that bounds these — at web scale the distinct-token
-#: space (typos, IDs, URLs) is billions of rows, so the hint is decided
-#: by a bounded existence probe (``limit(N+1).count()``, memoized via
-#: ``probe_memo``) instead of assumed from Zipf.  1M rows of
-#: (token, count) ≈ tens of MB serialized — the practical ceiling for
-#: shipping a table to every executor.  Above it the join is left
-#: unhinted: AQE promotes it back to broadcast at runtime iff the actual
-#: bytes fit ``autoBroadcastJoinThreshold``.
+#: rows a data-dependent token table may have and still be broadcast-hinted
 MAX_BROADCAST_TOKEN_ROWS = 1_000_000
 
 
@@ -448,12 +439,10 @@ def _broadcast_if_bounded(df: DataFrame, kind: str):
     """Broadcast-hint ``df`` only when a bounded probe proves its row
     count ≤ ``MAX_BROADCAST_TOKEN_ROWS``; otherwise return it unhinted
     (shuffle join, or AQE-promoted broadcast if runtime stats fit)."""
-    from time_series_db_spark.cache import probe_memo
+    from time_series_db_spark.cache import within_bound
 
-    n = probe_memo(
-        df, kind, lambda: df.limit(MAX_BROADCAST_TOKEN_ROWS + 1).count()
-    )
-    return F.broadcast(df) if n <= MAX_BROADCAST_TOKEN_ROWS else df
+    bounded = within_bound(df, MAX_BROADCAST_TOKEN_ROWS, kind)
+    return F.broadcast(df) if bounded else df
 
 
 def tfidf_terms(
@@ -1103,7 +1092,7 @@ def ngram_novelty(
     df = textprep.rebalance_if_narrow(df)
     grams = textprep.word_shingles(textprep.tokens(F.col(text_col)), k)
     ex = df.select(F.col(id_col), F.explode(grams).alias("__g")).withColumn(
-        "__h", textprep.hash64(F.col("__g"), "nov", fn=hash_fn)
+        "__h", hash64(F.col("__g"), "nov", fn=hash_fn)
     )
     prev = ex.groupBy("__h").agg(
         F.count(F.lit(1)).cast("long").alias("__n_docs")

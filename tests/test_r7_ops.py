@@ -358,6 +358,35 @@ def test_bloom_decontaminate_tiny_bitmap_still_exact(spark):
     assert out == exact
 
 
+@pytest.mark.parametrize("m_bits, literal", [(1 << 20, True), (1 << 21, False)])
+def test_bloom_bitmap_over_the_literal_cap(spark, m_bits, literal):
+    """A bitmap of more than ``MAX_LITERAL_ELEMS`` words (2²¹ bits is the
+    smallest power of two over it) travels as a one-row createDataFrame,
+    not as unbounded SQL text; the result is the same either way."""
+    from time_series_db_spark.literals import MAX_LITERAL_ELEMS, literal_frame
+    from time_series_db_spark.pipeline import decontam
+
+    assert (m_bits // 64 <= MAX_LITERAL_ELEMS) == literal
+    # literal inputs, so the bitmap is the plan's only possible RDD scan
+    corpus = literal_frame(spark, [
+        (1, "the quick brown fox jumps over the lazy dog today"),
+        (2, "completely unrelated text about spark distributed joins"),
+        (3, None),
+        (4, ""),
+    ], "doc_id long, text string")
+    evals = literal_frame(
+        spark, [(100, "xx the quick brown fox jumps over yy")],
+        "doc_id long, text string",
+    )
+    bloom = decontam.bloom_decontaminate(corpus, evals, n=3, m_bits=m_bits)
+    plan = bloom._jdf.queryExecution().analyzed().toString()
+    assert ("LogicalRDD" in plan) != literal
+    exact = decontam.decontaminate(corpus, evals, n=3)
+    assert sorted(map(tuple, bloom.collect())) == sorted(
+        map(tuple, exact.collect())
+    )
+
+
 def test_bloom_decontaminate_validates_params(spark):
     from time_series_db_spark.pipeline import decontam
 

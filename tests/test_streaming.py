@@ -188,6 +188,39 @@ def test_compaction_preserves_rows(spark, tmp_path):
     assert after == before
 
 
+def test_maintenance_refuses_file_sink_store(spark, tmp_path):
+    """A store written by the streaming file sink is listed through its
+    ``_spark_metadata`` log, which names every data file: compaction and
+    retention refuse it and leave every row readable."""
+    src = tmp_path / "in"
+    src.mkdir()
+    table = str(tmp_path / "metrics")
+    for b, t in enumerate((T0, T0 + 4 * H)):
+        (src / f"b{b}.json").write_text(
+            "\n".join(_doc(f"name cpu host h{j}", t + j, float(j)) for j in range(6))
+        )
+        q = start_ingest(spark, str(src), table, available_now=True)
+        q.awaitTermination(120)
+    assert os.path.isdir(os.path.join(table, "_spark_metadata"))
+
+    def _rows():
+        return sorted(
+            tuple(r)
+            for r in spark.read.parquet(table)
+            .select("series_key", "ts", "value")
+            .collect()
+        )
+
+    before = _rows()
+    assert len(before) == 12
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        compact_blocks(spark, table, min_files=1)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        apply_retention(table, H, T0 + 4 * H, DEFAULT_BLOCK_MS)
+    assert list_blocks(table) == [T0, T0 + 4 * H]
+    assert _rows() == before
+
+
 def test_stats_sections(spark, sf_dir, duck):
     sf = fetch_events(spark, sf_dir)
 

@@ -26,33 +26,10 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from time_series_db_spark.literals import lit_array, literal_frame
 from time_series_db_spark.pipeline.dedup import cosine_expr
 
 NUM_PLANES = 8
-
-
-def _lit_array(vals, elem_type: str = "double") -> Column:
-    """One-call array literal via SQL text.  A per-element
-    ``F.array(*[F.lit(v) ...])`` build costs one py4j round trip PER
-    ELEMENT — the d(d+1)/2-sized PCA index LUTs (2080 entries each)
-    spent ~1.5 s of driver time per plan build on literal construction
-    alone (r14 profiling).  ``repr`` round-trips doubles exactly;
-    non-finite values render through ``double('...')``."""
-
-    def _d(v: float) -> str:
-        if v != v or v in (float("inf"), float("-inf")):
-            return f"double('{v}')"
-        return repr(v) + "D"
-
-    if elem_type == "double":
-        body = ",".join(_d(float(v)) for v in vals)
-    elif elem_type == "int":
-        body = ",".join(str(int(v)) for v in vals)
-    elif elem_type == "bigint":
-        body = ",".join(f"{int(v)}L" for v in vals)
-    else:  # pragma: no cover - guard against silent mistypes
-        raise ValueError(f"unsupported literal array type {elem_type!r}")
-    return F.expr(f"array({body})").cast(f"array<{elem_type}>")
 
 
 def _plane_weight(plane: int, dim_col: Column) -> Column:
@@ -717,8 +694,10 @@ def cosine_topk_arrow(
         F.col(id_col), _as_double(F.col(vec_col)).alias("__qv")
     ).collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank long, cosine double"
+        return literal_frame(
+            corpus.sparkSession,
+            [],
+            "query_id long, neighbor_id long, rank long, cosine double",
         )
     q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
     qm = np.array([r["__qv"] for r in q_rows], dtype=np.float64)
@@ -872,7 +851,7 @@ def project_jl(
     v = _as_double(F.col(vec_col))
     cols = []
     for j in range(d_out):
-        signs = _lit_array([float(r[i][j]) for i in range(d_in)])
+        signs = lit_array([float(r[i][j]) for i in range(d_in)])
         dot = F.aggregate(
             F.zip_with(v, signs, lambda x, s: x * s),
             F.lit(0.0),
@@ -952,8 +931,8 @@ def pca_cov_frame(
         .groupBy("i")
         .agg(F.sum("__x").alias("sxi"))
     )
-    i_lut = _lit_array(iu, "int")
-    j_lut = _lit_array(ju, "int")
+    i_lut = lit_array(iu, "int")
+    j_lut = lit_array(ju, "int")
     flat = (
         partials.select(F.posexplode("psxx").alias("k", "__x"))
         .groupBy("k")
@@ -1057,12 +1036,12 @@ def pca_transform(
     mean = model["mean"]
     centered = F.zip_with(
         v,
-        _lit_array([float(m) for m in mean]),
+        lit_array([float(m) for m in mean]),
         lambda x, m: x - m,
     )
     cols = []
     for k, comp in enumerate(model["components"]):
-        basis = _lit_array([float(c) for c in comp])
+        basis = lit_array([float(c) for c in comp])
         dot = F.aggregate(
             F.zip_with(centered, basis, lambda x, c: x * c),
             F.lit(0.0),

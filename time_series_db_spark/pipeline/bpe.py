@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import textprep
 
 
@@ -301,8 +302,10 @@ def bpe_merges(
     right_sym, freq)`` — the BPE model artifact (rank order IS the
     apply order)."""
     merges, _ = bpe_train(docs, n_merges, text_col)
-    return docs.sparkSession.createDataFrame(
-        merges, "merge_rank long, left_sym string, right_sym string, freq long"
+    return literal_frame(
+        docs.sparkSession,
+        merges,
+        "merge_rank long, left_sym string, right_sym string, freq long",
     )
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from time_series_db_spark.hashing import hash64
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import textprep
 
 
@@ -131,7 +132,9 @@ def bloom_decontaminate(
     side — an undersized fixed bitmap stays CORRECT (the confirm join
     absorbs the false-positive flood) but silently loses the prefilter
     (the 10× scale self-check caught exactly that with the old fixed
-    2²⁰ default).
+    2²⁰ default).  The bitmap travels as a literal plan up to
+    ``literals.MAX_LITERAL_ELEMS`` words (``m_bits`` ≤ 2²⁰), above that
+    as a one-row ``createDataFrame``.
 
     Output: ``(id_col, n_collisions, contaminated)``.
     """
@@ -213,13 +216,8 @@ def bloom_decontaminate(
     def probes(gh: Column) -> list[Column]:
         return _probes_for(mask, gh)
 
-    # one-call literal plan (not createDataFrame: an RDD-backed one-row
-    # frame changes the downstream plan identity per call and pays a
-    # per-call materialization; 16384 longs render as one SQL literal)
-    bits = corpus.sparkSession.range(1).select(
-        F.expr(
-            "array(" + ",".join(f"{w}L" for w in bitmap) + ")"
-        ).alias("__bloom")
+    bits = literal_frame(
+        corpus.sparkSession, [(bitmap,)], "__bloom array<bigint>"
     )
 
     grams = (

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_db_spark.hashing import hash64
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import textprep
 
 #: MinHash defaults: 16 permutations, 4 bands × 4 rows → catches
@@ -979,8 +980,10 @@ def connected_components(
                 ra, rb = find(a), find(b)
                 parent[max(ra, rb)] = min(ra, rb)
         idt = e2.schema["a"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            [(v, find(v)) for v in parent], f"id {idt}, comp {idt}"
+        return literal_frame(
+            edges.sparkSession,
+            [(v, find(v)) for v in parent],
+            f"id {idt}, comp {idt}",
         )
 
     adj = persist_tracked(

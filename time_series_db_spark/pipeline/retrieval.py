@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from time_series_db_spark.hashing import hash64
+from time_series_db_spark.literals import literal_frame
 from time_series_db_spark.pipeline import textprep
 
 
@@ -518,7 +519,8 @@ def mmr_rerank(
     # the id keeps the shortlist's own type (string doc ids work), the
     # rel column the caller's rel_col name
     id_type = shortlist.schema[id_col].dataType.simpleString()
-    return shortlist.sparkSession.createDataFrame(
+    return literal_frame(
+        shortlist.sparkSession,
         rows,
         f"`{id_col}` {id_type}, `{rel_col}` double, "
         f"`mmr_score` double, `rank` bigint",

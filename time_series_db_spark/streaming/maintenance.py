@@ -51,13 +51,26 @@ def list_blocks(table_path: str) -> list[int]:
     return sorted(out)
 
 
+def _refuse_sink_log(table_path: str) -> None:
+    """A streaming file sink's ``_spark_metadata`` log names every data
+    file, and readers list the table through it: deleting or rewriting
+    files under it breaks every later read."""
+    if os.path.isdir(os.path.join(table_path, "_spark_metadata")):
+        raise ValueError(
+            f"{table_path} holds a streaming file-sink log (_spark_metadata) "
+            "that names its data files; maintenance would break its reads"
+        )
+
+
 def apply_retention(
     table_path: str, retention_ms: int, now_ms: int, block_ms: int
 ) -> list[int]:
     """Drop every block whose *entire* range [block, block+block_ms) is
     older than ``now - retention`` (TimeBasedRetention semantics: an index
     is only dropped when all its data has aged out). Returns dropped
-    block ids."""
+    block ids.  Raises ``ValueError`` on a file-sink table (see
+    :func:`_refuse_sink_log`)."""
+    _refuse_sink_log(table_path)
     horizon = now_ms - retention_ms
     dropped = []
     for block in list_blocks(table_path):
@@ -83,8 +96,10 @@ def compact_blocks(
     gets from per-series XOR chunks — and rewritten as
     ``ceil(bytes/target)`` files. Atomicity: rewrite lands in a temp dir,
     then swaps in (rename) — readers between swaps see either version.
-    Returns the compacted block ids.
+    Returns the compacted block ids.  Raises ``ValueError`` on a
+    file-sink table (see :func:`_refuse_sink_log`).
     """
+    _refuse_sink_log(table_path)
     done = []
     for block in blocks if blocks is not None else list_blocks(table_path):
         bdir = os.path.join(table_path, f"block={block}")

@@ -520,6 +520,7 @@ def start_alert_rule(
             fresh.write.mode("append").partitionBy("block").parquet(
                 alerts_path
             )
+            # a write path, not a query: the marker plan is never reused
             spark.createDataFrame(
                 [(int(epoch_id),)], "epoch long"
             ).write.mode("append").parquet(epochs_path)
